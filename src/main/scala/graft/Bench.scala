@@ -1,22 +1,39 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Path, Paths}
+
+/** The query timer.
+  *
+  * `runMain graft.Bench` times every declared query and prints the
+  * one-line JSON contract. `runMain graft.Bench q_tpch_q4 q_pagerank`
+  * times only the named queries with the same method; an unknown name
+  * stops the run before any work. Per query, BENCH_DETAIL.json carries
+  * the median and min wall seconds, every rep, and the median executor
+  * CPU seconds (`cpu_s`) and shuffle write MB (`shuffle_mb`) of a rep.
+  *
+  * Env: `SPARK_GRAFT_SF_DIR` (the corpus directory),
+  * `SPARK_GRAFT_BENCH_REPS` (odd, default 3) and the session env of
+  * [[Session]]. To A/B a conf, pass `-Dspark.<key>=<value>` through
+  * `run / javaOptions`.
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // 70+ queries × several codegen units each blows straight through
-      // the default 100-entry generated-class cache — warmup compilations
-      // would be evicted before the timed pass reuses them
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val catalog = SparkEntry.queries
+    // fail BEFORE the ~2-min warmup pass, not after; and odd reps make
+    // the median an actual middle element (even reps would silently
+    // report the upper-middle)
+    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    require(reps >= 1 && reps % 2 == 1,
+      s"SPARK_GRAFT_BENCH_REPS must be a positive odd number, got $reps")
+    val unknown = args.filterNot(catalog.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[bench] unknown query: ${unknown.mkString(" ")}")
+      sys.exit(2)
+    }
+    val full = args.isEmpty
+    val names = if (full) catalog.keys.toSeq else args.toSeq.distinct
+    val spark = Session("graft-bench")
+    val cost = new StageCost(spark)
     // Steady-state methodology (JMH-style): one untimed warmup pass over
     // every query absorbs the one-shot JVM costs — Janino compilation of
     // each plan's generated code, C2 JIT of the hot loops, first-touch of
@@ -27,11 +44,11 @@ object Bench {
     // (q_dedup_clusters absorbed ~5 s of the dedup family's codegen purely
     // by map-iteration order). Persisted intermediates are released after
     // every run, warmup included — only JIT state stays warm, no data.
-    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        warmup: Boolean): Double = {
+    def runOnce(name: String, warmup: Boolean): Rep = {
+      val c0 = cost.sample()
       val t0 = System.nanoTime()
       val ok =
-        try { fn(spark, sfDir).count(); true }
+        try { catalog(name)(spark, sfDir).count(); true }
         catch { case e: Throwable =>
           if (!warmup) System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           false
@@ -42,26 +59,19 @@ object Bench {
       // release pipeline-local persisted intermediates between queries so
       // caching helps within a query but can't accumulate across 70+
       ops.CacheUtils.releaseAll(spark)
-      elapsed
+      Rep(elapsed, cost.sample() - c0)
     }
-    // fail BEFORE the ~2-min warmup pass, not after; and odd reps make
-    // the median an actual middle element (even reps would silently
-    // report the upper-middle)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    require(reps >= 1 && reps % 2 == 1,
-      s"SPARK_GRAFT_BENCH_REPS must be a positive odd number, got $reps")
     // Ambient host load (1-min loadavg), sampled before and after the
     // run: the headline is already a median-of-reps, but cross-round
     // comparisons on a shared host still need to see the weather — a
     // 2× wall swing with load recorded is adjudicable without prose.
     def loadAvg(): Double =
       try {
-        val s = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0)
+        val s = new String(Files.readAllBytes(Paths.get("/proc/loadavg"))).split(" ")(0)
         math.rint(s.toDouble * 100) / 100
       } catch { case _: Exception => -1.0 }
     val loadBefore = loadAvg()
-    SparkEntry.queries.foreach { case (name, fn) => runOnce(name, fn, warmup = true) }
+    names.foreach(runOnce(_, warmup = true))
     // MEDIAN of `reps` timed passes per query, interleaved ROUND-ROBIN
     // (pass 1 of every query, then pass 2, ...) rather than back-to-back:
     // two rounds of single-pass numbers on byte-identical code showed 2-4×
@@ -70,30 +80,34 @@ object Bench {
     // interleaving decorrelates the passes, so the median discards the
     // unlucky one. Any failed pass reports the query as -1 (a breakage
     // must never hide behind two good passes).
-    val names = SparkEntry.queries.keys.toSeq
-    val samples: Map[String, Seq[Double]] = {
+    val samples: Map[String, Seq[Rep]] = {
       val passes = (0 until reps).map { _ =>
-        names.map(n => n -> runOnce(n, SparkEntry.queries(n), warmup = false)).toMap
+        names.map(n => n -> runOnce(n, warmup = false)).toMap
       }
       names.map(n => n -> passes.map(_(n))).toMap
     }
-    def median(xs: Seq[Double]): Double =
-      if (xs.exists(_ < 0)) -1.0
-      else { val s = xs.sorted; s(s.size / 2) }
-    val results: Map[String, Double] = samples.map { case (n, xs) => n -> median(xs) }
+    def middle(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.size / 2) }
+    def median(xs: Seq[Double]): Double = if (xs.exists(_ < 0)) -1.0 else middle(xs)
+    val results: Map[String, Double] = samples.map { case (n, rs) => n -> median(rs.map(_.wallS)) }
     // min-of-reps alongside the median: the median is the headline, but on
     // a shared host the min is the load-robust floor — a rep spread like
     // [7.0, 14.2, 0.5] is ambient weather, and carrying the min per round
     // lets that be adjudicated from artifacts instead of re-measurement
     def minRep(xs: Seq[Double]): Double =
       if (xs.exists(_ < 0)) -1.0 else xs.min
-    val mins: Map[String, Double] = samples.map { case (n, xs) => n -> minRep(xs) }
     val total = math.rint(results.values.filter(_ >= 0).sum * 1000) / 1000
-    val totalMin = math.rint(mins.values.filter(_ >= 0).sum * 1000) / 1000
-    // Full-precision per-rep samples to a file for plan/variance audits…
-    val detail = samples.map { case (k, xs) =>
+    val totalMin = math.rint(samples.values.map(rs => minRep(rs.map(_.wallS)))
+      .filter(_ >= 0).sum * 1000) / 1000
+    def r3(v: Double): Double = math.rint(v * 1000) / 1000
+    // Full-precision per-rep samples to a file for plan/variance audits,
+    // with the executor cost of a rep: wall time swings with host load,
+    // executor CPU and shuffle bytes do not
+    val detail = samples.map { case (k, rs) =>
+      val xs = rs.map(_.wallS)
       s"\"" + k + "\":{\"median\":" + median(xs) + ",\"min\":" + minRep(xs) +
-        ",\"runs\":" + xs.mkString("[", ",", "]") + "}"
+        ",\"runs\":" + xs.mkString("[", ",", "]") +
+        ",\"cpu_s\":" + r3(middle(rs.map(_.cost.cpuS))) +
+        ",\"shuffle_mb\":" + r3(middle(rs.map(_.cost.shuffleMb))) + "}"
     }.mkString("{", ",", "}")
     val loadAfter = loadAvg()
     val loadJson =
@@ -101,38 +115,17 @@ object Bench {
     // the bench's parallelism contract, self-evident in the artifact
     // (round-16 adjudication: "cpus" above is the HOST core count, which
     // made an 8-core driver run look like the env var was ignored):
-    // cpus_requested echoes $SPARK_GRAFT_CPUS, parallelism is the live
-    // sc.defaultParallelism under local[$cpus] — the two must agree
+    // cpus_requested is Session's parsed $SPARK_GRAFT_CPUS, parallelism
+    // is the live sc.defaultParallelism under local[cpus] — the two must
+    // agree
     val parJson =
-      s""""cpus_requested":$cpus,"parallelism":${spark.sparkContext.defaultParallelism}"""
+      s""""cpus_requested":${Session.cpus},"parallelism":${spark.sparkContext.defaultParallelism}"""
     val detailLine =
       s"""{"metric":"total","value":$total,"min":$totalMin,"unit":"sec","reps":$reps,$parJson,$loadJson,"queries":$detail,"sf":"$sfDir"}""" + "\n"
     try {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_DETAIL.json"), detailLine)
-      // …and an immutable per-round copy (BENCH_DETAIL_r{N}.json): the
-      // driver stamps BENCH_r{N}.json after this run, so the round in
-      // flight is max(existing N) + 1 — keeping every round's rep history
-      // on disk makes bench-weather adjudication artifact-only
-      val dir = java.nio.file.Paths.get(".")
-      val benchRe = java.util.regex.Pattern.compile("BENCH_r(\\d+)\\.json")
-      var maxRound = 0
-      val ls = java.nio.file.Files.list(dir)
-      try {
-        ls.forEach { p =>
-          val m = benchRe.matcher(p.getFileName.toString)
-          if (m.matches()) maxRound = math.max(maxRound, m.group(1).toInt)
-        }
-      } finally ls.close()
-      // the sf tag keys the filename too: the gate benches BOTH scale
-      // factors in one round, and without it the second invocation would
-      // silently overwrite the first run's rep history — defeating the
-      // artifact-only weather adjudication this file exists for
-      val sfTag = java.nio.file.Paths.get(sfDir).getFileName.toString
-        .replaceAll("[^A-Za-z0-9.]", "_")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(f"BENCH_DETAIL_r${maxRound + 1}%02d_$sfTag%s.json"),
-        detailLine)
+      Files.writeString(Paths.get("BENCH_DETAIL.json"), detailLine)
+      // …and an immutable per-round copy of a full run
+      if (full) Files.writeString(roundFile(Paths.get("."), sfDir), detailLine)
     } catch { case _: Exception => () } // cwd may not be writable under the harness
     // …but the stdout line must survive the harness's bounded (2000-char)
     // output-tail capture with sbt's footer behind it, or it never parses:
@@ -162,5 +155,35 @@ object Bench {
     val qs = kept.mkString("{", ",", "}")
     println(s"""{"metric":"total","value":$total,"min":$totalMin,"unit":"sec","reps":$reps,$parJson,$loadJson,"queries":$qs,"omitted":$omitted,"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** One timed run of one query: wall seconds (-1 if it failed) and the
+    * executor cost of its stages.
+    */
+  private final case class Rep(wallS: Double, cost: StageCost.Sample)
+
+  /** BENCH_DETAIL_r{N}_{sf}.json, the round's immutable copy: the
+    * round's BENCH_r{N}.json is stamped after this run, so the round in
+    * flight is max(existing N) + 1 — keeping every round's rep history on disk
+    * makes bench-weather adjudication artifact-only. The sf tag keys the
+    * name because both scale factors are benched in one round; a second
+    * full run of the same round and sf gets `_run2`, `_run3`, … instead
+    * of overwriting the first.
+    */
+  private[graft] def roundFile(dir: Path, sfDir: String): Path = {
+    val benchRe = java.util.regex.Pattern.compile("BENCH_r(\\d+)\\.json")
+    var maxRound = 0
+    val ls = Files.list(dir)
+    try {
+      ls.forEach { p =>
+        val m = benchRe.matcher(p.getFileName.toString)
+        if (m.matches()) maxRound = math.max(maxRound, m.group(1).toInt)
+      }
+    } finally ls.close()
+    val sfTag = Paths.get(sfDir).getFileName.toString.replaceAll("[^A-Za-z0-9.]", "_")
+    val base = f"BENCH_DETAIL_r${maxRound + 1}%02d_$sfTag%s"
+    Iterator.from(1)
+      .map(i => dir.resolve(if (i == 1) s"$base.json" else s"${base}_run$i.json"))
+      .find(!Files.exists(_)).get
   }
 }

@@ -263,14 +263,5 @@ object Main {
   private def printSafe(s: String): Unit =
     try println(s) catch { case _: java.io.IOException => () }
 
-  private def session(): SparkSession =
-    SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+  private def session(): SparkSession = graft.Session("graft-cli")
 }

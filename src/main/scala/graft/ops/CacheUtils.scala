@@ -12,7 +12,17 @@ import org.apache.spark.sql.SparkSession
   */
 object CacheUtils {
 
-  /** Unpersist every RDD the context currently tracks (non-blocking). */
-  def releaseAll(spark: SparkSession): Unit =
+  /** Drop every cached Dataset from the shared CacheManager, then
+    * unpersist every RDD the context still tracks (non-blocking).
+    *
+    * Unpersisting the RDDs alone leaves each CacheManager entry behind
+    * with its blocks gone: a later `persist()` of the same plan (a re-run
+    * map-tee source) then matches the stale entry and recomputes the
+    * source once per consumer, so an external-command source of a tee
+    * would run once per branch instead of once.
+    */
+  def releaseAll(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+  }
 }

@@ -878,14 +878,6 @@ object RelationalQueries {
     * pinned toy width.
     */
   private[ops] def stateWidthFor(s: SparkSession, d: String, table: String): String = {
-    // operator escape hatch (and the round-17 scale-experiment hook): a
-    // deployment that knows its state width sets SPARK_GRAFT_STATE_WIDTH;
-    // unset (the default, and what the driver's bench sees) keeps the
-    // measured data-derived rule below
-    sys.env.get("SPARK_GRAFT_STATE_WIDTH") match {
-      case Some(w) if w.trim.nonEmpty => return w.trim
-      case _ => ()
-    }
     val width =
       try {
         val p = new org.apache.hadoop.fs.Path(s"$d/$table.parquet")

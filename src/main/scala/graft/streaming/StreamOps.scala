@@ -54,7 +54,7 @@ object StreamOps {
   /** Session windows: gap-closed per-key sessions (the streaming form of
     * the batch q_sessionize operator).
     *
-    * Deployment note (tools/SessionTune, 40 M-event matrix, graded by
+    * Deployment note (40 M-event tuning matrix in PERF.md, graded by
     * executor CPU time — wall clock on the soak host swings 2× between
     * identical runs): `spark.sql.streaming.sessionWindow.merge.sessions
     * .in.local.partition` pre-merges each partition's sessions before

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-7 scale soak: the new operator families at 10–100× the sf0.1
@@ -23,13 +22,7 @@ object AnalyticsSoak {
       .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
     def selected(name: String): Boolean =
       only.isEmpty || only.exists(name.contains)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("AnalyticsSoak")
 
     def timed(name: String, unit: Long)(body: => Long): Unit = if (selected(name)) {
       val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-12b scale soak: the document/sidecar format arms at 100×+ the
@@ -24,12 +23,7 @@ object DocSoak {
       .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
     def selected(name: String): Boolean =
       only.isEmpty || only.exists(name.contains)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("DocSoak")
     import spark.implicits._
 
     val docsDir = s"/tmp/graft_docsoak_$nDocs"

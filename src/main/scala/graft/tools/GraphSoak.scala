@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** PageRank scale soak: synthetic power-law-ish edge list (pure function
@@ -18,13 +17,7 @@ object GraphSoak {
     val n = args.headOption.map(_.toLong).getOrElse(8000000L)
     val iters = args.lift(1).map(_.toInt).getOrElse(5)
     val v = math.max(n / 10, 16L)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("GraphSoak")
     val dir = s"/tmp/graft_graphsoak_$n"
     if (!new java.io.File(s"$dir/_SUCCESS").exists())
       spark.range(0, n, 1, 64)

@@ -34,13 +34,7 @@ object IvfSoak {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val batch = args.lift(1).map(_.toLong).getOrElse(250000L)
     val nBatches = args.lift(2).map(_.toInt).getOrElse(4)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("IvfSoak")
 
     val prefix = s"ivfsoak_$n"
     val base = s"/tmp/graft_ivfsoak_$n"
@@ -51,20 +45,14 @@ object IvfSoak {
     try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
     catch { case _: Exception => () }
 
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        cpuNs.addAndGet(sc.stageInfo.taskMetrics.executorCpuTime)
-    })
+    val cost = new graft.StageCost(spark)
     def timed[A](name: String)(body: => A): A = {
-      val c0 = cpuNs.get
+      val c0 = cost.sample()
       val t0 = System.nanoTime()
       val r = body
       val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // listener drain
       println(f"[ivf-soak] n=$n%-9d $name%-18s $dt%8.2f s  " +
-        f"cpu=${(cpuNs.get - c0) / 1e9}%8.1f s")
+        f"cpu=${(cost.sample() - c0).cpuS}%8.1f s")
       r
     }
 

@@ -1,8 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-12 dedup scale soak: the LSH near-dup pipeline and the span
@@ -38,42 +35,22 @@ object LshSoak {
     def selected(name: String): Boolean =
       only.isEmpty || only.exists(name.contains)
     val pid = ProcessHandle.current().pid()
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", s"/tmp/graft_lshsoak_wh_$pid")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("LshSoak",
+      conf = Map("spark.sql.warehouse.dir" -> s"/tmp/graft_lshsoak_wh_$pid"))
 
     // Contention-independent cost counters: wall clock on this host is
     // noisy, so report executor CPU + shuffle write volume alongside it
-    // (the SessionTune discipline). Stage metrics arrive on the listener
-    // bus asynchronously; a short drain sleep before reading suffices at
-    // soak granularity.
-    val shufBytes = new AtomicLong
-    val shufRecs = new AtomicLong
-    val cpuNs = new AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        shufBytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        shufRecs.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-        cpuNs.addAndGet(sc.stageInfo.taskMetrics.executorCpuTime)
-      }
-    })
+    val cost = new graft.StageCost(spark)
 
     def timed(name: String, unit: Long)(body: => Long): Unit = if (selected(name)) {
-      Thread.sleep(1500) // drain prior stage's listener events
-      shufBytes.set(0); shufRecs.set(0); cpuNs.set(0)
+      val c0 = cost.sample()
       val t0 = System.nanoTime()
       val rows = body
       val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1500) // drain this stage's listener events
+      val c = cost.sample() - c0
       println(f"[lshsoak] $name%-22s $dt%8.2f s  rows=$rows%,14d  " +
-        f"cpu=${cpuNs.get / 1e9}%8.1f s  shufGB=${shufBytes.get / 1e9}%7.2f  " +
-        f"shufRecs=${shufRecs.get}%,14d  (${dt * 1e6 / unit}%.2f µs/doc)")
+        f"cpu=${c.cpuS}%8.1f s  shufGB=${c.shuffleBytes / 1e9}%7.2f  " +
+        f"shufRecs=${c.shuffleRecords}%,14d  (${dt * 1e6 / unit}%.2f µs/doc)")
       graft.ops.CacheUtils.releaseAll(spark)
     }
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-14 scale soak for the D4-orbit oriented image pairing
@@ -31,11 +30,7 @@ object OrientSoak {
       .getOrElse(Seq(200L, 800L))
     val maxResidentSubsets = if (args.length > 1) args(1).toInt else 0
     val nBlocks = if (args.length > 2) args(2).toInt else 7
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session("OrientSoak")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

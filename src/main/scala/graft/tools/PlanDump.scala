@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints the formatted physical plan of selected declared queries —
   * the plan-review loop (pushdown reaching the scan, broadcast vs shuffle
   * joins, partial aggregation, whole-stage codegen spans).
@@ -19,13 +17,7 @@ object PlanDump {
     else if (args.length > 1) args.drop(1).toSeq
     else Seq("q_filter", "q_project", "q_join_broadcast", "q_join_sortmerge",
       "q_agg", "q_topk", "q_sim_topk")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session("PlanDump")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -63,13 +63,7 @@ object RecallCurve {
     val sections = args.lift(3).map(_.split(',').toSet)
     def section(s: String): Boolean = sections.forall(_.contains(s))
     val k = 10
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("RecallCurve")
     import spark.implicits._
 
     // materialized like a real corpus (scans from disk, not a cached range)

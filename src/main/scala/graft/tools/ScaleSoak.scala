@@ -49,15 +49,9 @@ object ScaleSoak {
       .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
     def selected(name: String): Boolean =
       only.isEmpty || only.exists(name.contains)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // NOTE: driver heap cannot be set from inside a running JVM — it
-      // comes from the forked JVM's -Xmx (build.sbt run settings)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // NOTE: the heap cannot be set from inside a running JVM — it
+    // comes from the forked JVM's -Xmx (build.sbt run settings)
+    val spark = graft.Session("ScaleSoak")
 
     // materialize the corpus to parquet so every stage reads from disk
     // like a real pipeline (not from a cached in-memory range)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.SkewUtils
@@ -34,13 +34,7 @@ object SkewSoak {
     val hotPct = args.lift(1).map(_.toInt).getOrElse(30)
     val buckets = args.lift(2).map(_.toInt).getOrElse(32)
     val nKeys = 1000000L
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("SkewSoak")
 
     val dir = s"/tmp/graft_skewsoak_${n}_$hotPct"
     if (!new java.io.File(s"$dir/facts/_SUCCESS").exists()) {

@@ -24,8 +24,7 @@ object StreamingSoak {
 
   /** Write-once ordered 30-day event corpus in `nFiles` contiguous time
     * slices (file order == time order, so AvailableNow batches advance
-    * the watermark monotonically); returns the parquet dir. Shared with
-    * [[SessionTune]].
+    * the watermark monotonically); returns the parquet dir.
     */
   def corpus(spark: SparkSession, nEvents: Long, nFiles: Int): String = {
     val dir = s"/tmp/graft_streamsoak_${nEvents}_$nFiles"
@@ -92,13 +91,7 @@ object StreamingSoak {
 
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("floor")) {
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = graft.Session("StreamingSoak")
       floorCert(spark)
       spark.stop()
       return
@@ -106,13 +99,7 @@ object StreamingSoak {
     val nEvents = args.headOption.map(_.toLong).getOrElse(40000000L)
     val nFiles = args.lift(1).map(_.toInt).getOrElse(64)
     val filesPerBatch = args.lift(2).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("StreamingSoak")
     import spark.implicits._
 
     val dir = corpus(spark, nEvents, nFiles)

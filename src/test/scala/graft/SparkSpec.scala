@@ -3,20 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test harness: one session per suite (lazy), configured like the
-  * driver's Verify session (UTC, ns-as-long, small shuffle width).
+/** Shared test harness: one session per suite (lazy), built by
+  * [[Session]] like Verify's session, at a fixed `local[4]`
+  * whatever the host's core count.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
-      s"/tmp/graft-warehouse-${sys.props.getOrElse("user.name", "u")}")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session(getClass.getSimpleName, cpus = 4,
+    conf = Map("spark.sql.warehouse.dir" ->
+      s"/tmp/graft-warehouse-${sys.props.getOrElse("user.name", "u")}"))
 
   val sfDir = "/root/testdata/sf0.001"
 }

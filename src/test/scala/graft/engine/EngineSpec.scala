@@ -81,6 +81,33 @@ class EngineSpec extends SparkSpec {
     assert(collectValues(out).sorted == Seq("src-x", "src-y"))
   }
 
+  test("a map-tee re-run after releaseAll computes its source once, not once per branch") {
+    val sourceRows = spark.sparkContext.longAccumulator("tee-source-rows")
+    // deterministic, so every run's persisted source is the same plan
+    val counted = udf((_: String) => { sourceRows.add(1); true })
+    val reg = ModuleRegistry.default
+      .register("count_source", df => df.filter(counted(col(CommandStage.ValueCol))))
+      .register("suffix_x", df => df.withColumn(CommandStage.ValueCol,
+        concat(col(CommandStage.ValueCol), lit("-x"))))
+      .register("suffix_y", df => df.withColumn(CommandStage.ValueCol,
+        concat(col(CommandStage.ValueCol), lit("-y"))))
+    val spec = PipelineSpec(ListMap("tee" -> Seq(
+      Stage.Module("count_source", SegType.MapTee),
+      Stage.Module("suffix_x", SegType.MapTee),
+      Stage.Module("suffix_y", SegType.MapTee))))
+    // a range, not a local Seq: the optimizer would evaluate the counting
+    // filter over a LocalRelation at planning time
+    val in = spark.range(3).select(col("id").cast("string").as(CommandStage.ValueCol))
+    val perRun = (1 to 2).map { _ =>
+      sourceRows.reset()
+      val out = collectValues(new Engine(spec, reg).run("tee", spark, Some(in)))
+      assert(out.sorted == Seq("0-x", "0-y", "1-x", "1-y", "2-x", "2-y"))
+      graft.ops.CacheUtils.releaseAll(spark)
+      sourceRows.value.longValue
+    }
+    assert(perRun == Seq(3L, 3L), s"source rows computed per run: $perRun")
+  }
+
   test("reduce segment fans producers into the first aggregator (index.js:64)") {
     val reg = ModuleRegistry.default
       .register("emit_1", _ => lines("1", "2")) // producers ignore input

@@ -361,14 +361,13 @@ class TextAnalysisSpec extends SparkSpec {
     assert(out.toSeq == again.toSeq)
   }
 
-  test("lmScore grouped (doc,tok)-count form is bit-equal to the per-instance reference") {
-    // round-17 shape change: lmScore aggregates token INSTANCES to
-    // per-(doc, tok) counts before any exchange (guide §2.3 "aggregate
-    // before you shuffle"). This pins bit-equality to the original
-    // per-instance form on a corpus with heavy repetition (where the two
-    // shapes differ most): Σ_instances round(-ln p, 6) must equal
-    // Σ_(doc,tok) count · round(-ln p, 6) exactly — DECIMAL × integer is
-    // exact — and n_toks = Σ count.
+  test("lmScore with persisted vocab is bit-equal to the unpersisted reference") {
+    // Pins lmScore's vocab-persist shape: the vocab (the model) is
+    // persisted and the corpus token total is summed from it, so the
+    // total no longer re-runs the explode. The output must equal, bit for
+    // bit, the plain per-instance form below, which persists nothing —
+    // on a corpus with heavy repetition, per-token DECIMAL surprisals
+    // summed exactly, with n_toks the instance count.
     val docs = Seq(
       (0L, "a a a a a a b"),
       (1L, "a b c d e f g h"),

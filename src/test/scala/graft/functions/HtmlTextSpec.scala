@@ -1,20 +1,12 @@
 package graft.functions
 
 import org.apache.spark.unsafe.types.UTF8String
-import org.scalatest.funsuite.AnyFunSuite
 
-class HtmlTextSpec extends AnyFunSuite {
-  // compute() is pure — Spark is needed only for the column-form test,
-  // which reuses the shared SparkSpec-style local session lazily
-  private lazy val spark = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+import graft.SparkSpec
+
+// compute() is pure — Spark is needed only for the column-form test, whose
+// session SparkSpec builds lazily
+class HtmlTextSpec extends SparkSpec {
 
   private def x(html: String): String =
     HtmlText.compute(UTF8String.fromString(html)).toString

@@ -34,17 +34,4 @@ class TypeContractsSpec extends SparkSpec {
     assert(e.getMessage.contains("array<bigint>") ||
       e.getMessage.toLowerCase.contains("data type mismatch"))
   }
-
-  test("sparse_dot_w accepts array<struct<int,double>> only") {
-    val feats = Seq((1.0, Seq((0, 0.5), (1, 0.25))))
-      .toDF("y", "f")
-    val w = Array(2.0, 4.0)
-    val got = feats.select(SparseDot.sparse_dot_w(col("f"), w)).head().getDouble(0)
-    assert(got == 2.0 * 0.5 + 4.0 * 0.25)
-    val e = intercept[Exception] {
-      doubles.select(SparseDot.sparse_dot_w(col("v"), w)).collect()
-    }
-    assert(e.getMessage.contains("struct") ||
-      e.getMessage.toLowerCase.contains("data type mismatch"))
-  }
 }
